@@ -86,11 +86,14 @@ def _host_probe() -> dict:
     hard-coded Pool(32) at cpus=8 oversubscribed the probe 4x and
     mislabeled the reading, feeding the false "ignores CPUS" signal.
     ``parallel_sec`` + ``probe_parallelism`` are the honest pair; the
-    historical ``parallel32_sec`` key is kept ONLY when the pool really
-    is 32-wide, so the BASELINE.md bands stay comparable."""
+    historical ``parallel32_sec`` key carries a reading ONLY when the
+    pool really is 32-wide (null otherwise), so the BASELINE.md bands
+    stay comparable."""
     import multiprocessing as mp
 
-    lanes = min(32, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    from hh_rumors_presto_spark.session import default_parallelism
+
+    lanes = min(32, default_parallelism())
     t0 = time.time()
     _probe_burn()
     single = time.time() - t0
@@ -106,8 +109,7 @@ def _host_probe() -> dict:
         "probe_parallelism": lanes,
         "parallel_sec": round(par, 3) if par is not None else None,
     }
-    if lanes == 32:
-        out["parallel32_sec"] = out["parallel_sec"]
+    out["parallel32_sec"] = out["parallel_sec"] if lanes == 32 else None
     return out
 
 

@@ -27,7 +27,7 @@ matmuls inside per-(block-pair) ``applyInPandas`` workers instead:
   aggregation all disappear from the plan.
 
 EXACTNESS (why no bit-parity contract is needed here, unlike the cosine
-workers in ann_round3): every accumulated value is an INTEGER.  Counts
+workers in cosblocks.py): every accumulated value is an INTEGER.  Counts
 are bounded by the local vocab size (guarded < 2^24, so float32 partial
 sums are exact; float64 otherwise), and Adamic–Adar micro-weight sums
 are bounded by |suppliers| * floor(1e6/ln 2 + .5) < 2^53, so float64
@@ -41,7 +41,7 @@ Scale posture: the worker is the map side of a Σ block-pair
 decomposition — rows are replicated B ~ sqrt(2 * cores) times as thin
 (id, int-array) rows, the ONE exchange carries those rows instead of
 the pair mass, and the live C matrix is bounded by row-chunking exactly
-like ann_round3's workers (§5 memory).  B is a pure load-balance knob:
+like the cosblocks workers (§5 memory).  B is a pure load-balance knob:
 results are provably identical under any B.
 """
 
@@ -143,7 +143,8 @@ def _group_matrices(pdf: pd.DataFrame, weighted: bool):
     """Parse one block-pair group into per-side (ids, matrix, set sizes)
     plus the per-local-vocab weight vector when ``weighted``.  The B
     side aliases the A side on the diagonal pair (each row arrives
-    once; the worker takes the in-block upper triangle)."""
+    once; the worker takes the in-block upper triangle).  ``diag`` comes
+    from the group key: a one-sided off-diagonal group emits nothing."""
     side = pdf["__side"].to_numpy()
     ids = pdf["id"].to_numpy()
     flat, lens = _concat_lists(pdf["vids"])
@@ -166,7 +167,7 @@ def _group_matrices(pdf: pd.DataFrame, weighted: bool):
         m[remap[rows[rmask]], cols[rmask]] = 1.0
         return ids[sel], m, lens[sel]
 
-    diag = bool((side == 0).all())
+    diag = bool(pdf["__bp_i"].iat[0] == pdf["__bp_j"].iat[0])
     ida, ma, na = build(0)
     if diag:
         idb, mb, nb = ida, ma, na
@@ -195,7 +196,13 @@ def overlap_pairs_fn(
       >= t — the engines' own float comparison replayed on the same
       exact operands (NOT a rational rewrite: the boundary rounds the
       way the engines round it).
+
+    Exactly one of the two must be given (ValueError otherwise).
     """
+    if (rational is None) == (float_threshold is None):
+        raise ValueError(
+            "overlap_pairs_fn: give exactly one of rational / float_threshold"
+        )
 
     cols = ["id_a", "id_b"]
     empty_types = {"id_a": "int64", "id_b": "int64"}

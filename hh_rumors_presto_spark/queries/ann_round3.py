@@ -48,6 +48,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.operators.cosblocks import (
+    block_topk_fn,
+    cosine,
+    desc_key,
+    label_blocks,
+    seq_sq_norm,
+    stack,
+)
 from hh_rumors_presto_spark.registry import query
 
 _ANN_K = 3  # must match breadth_round5._KNN_K: same output contract
@@ -129,13 +137,9 @@ def _top_cells_udf(cent_rows: list, probes: int):
     the top-``probes`` centroid ids by (cosine DESC NULLS LAST,
     cent_id ASC) — exactly the oracle's row_number order.
 
-    BIT-PARITY CONTRACT: every float op replays the engines' sequence.
-    Spark's HOF fold, DuckDB's list_inner_product, and the dim-loop
-    below all accumulate ``acc = acc + a[d]*c[d]`` left-to-right in
-    float64, so dot products, norms, and the final divide are
-    bit-identical across all three — near-tie rankings cannot diverge.
-    (A BLAS matmul would sum pairwise and break this; that is why the
-    loop is over DIMS with vectorized row ops, not np.dot.)
+    Dots and norms come from the operators/cosblocks kernel, so they
+    are bit-identical to both engines (its BIT-PARITY CONTRACT) and
+    near-tie rankings cannot diverge.
 
     The centroid matrix rides the closure (driver-collected once:
     C = ceil(sqrt(n)) rows — the bounded model-state fetch every
@@ -144,185 +148,25 @@ def _top_cells_udf(cent_rows: list, probes: int):
 
     cent_rows = sorted(cent_rows)  # (cent_id asc) for deterministic ties
     cent_ids = np.array([c[0] for c in cent_rows], dtype="int64")
-    cmat = (
-        np.array([c[1] for c in cent_rows], dtype="float64")
-        if cent_rows
-        else np.zeros((0, 0))
-    )
-    cnorm2 = np.zeros(len(cent_rows))
-    for d in range(cmat.shape[1]):
-        cnorm2 = cnorm2 + cmat[:, d] * cmat[:, d]
-    cnorm = np.sqrt(cnorm2)
+    cmat = stack([c[1] for c in cent_rows]) if cent_rows else np.zeros((0, 0))
+    cnorm = np.sqrt(seq_sq_norm(cmat))
 
     @pandas_udf("array<bigint>")
     def top_cells(embs: pd.Series) -> pd.Series:
         if len(embs) == 0 or len(cent_ids) == 0:
             return pd.Series([[] for _ in range(len(embs))])
-        emat = np.vstack([np.asarray(e, dtype="float64") for e in embs])
-        acc = np.zeros((emat.shape[0], cmat.shape[0]))
-        en2 = np.zeros(emat.shape[0])
-        for d in range(emat.shape[1]):
-            acc = acc + emat[:, d : d + 1] * cmat[None, :, d]
-            en2 = en2 + emat[:, d] * emat[:, d]
-        denom = np.sqrt(en2)[:, None] * cnorm[None, :]
-        invalid = denom == 0.0  # nullif(na*nc, 0) -> NULL -> sorts LAST
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cs = acc / denom
+        emat = stack(embs)
+        cs, invalid = cosine(emat, cmat, np.sqrt(seq_sq_norm(emat)), cnorm)
+        key = desc_key(cs, invalid)
         out = []
         for i in range(emat.shape[0]):
-            # order: valid before NULL, cos DESC, cent_id ASC — lexsort
-            # is last-key-primary, so keys are (cell, -cs, invalid)
-            key_cs = np.where(invalid[i], 0.0, -cs[i])
-            # NaN cosine (NaN data element) ranks FIRST: both engines
-            # treat NaN as greater than every value under DESC
-            key_cs = np.where(
-                np.isnan(key_cs) & ~invalid[i], -np.inf, key_cs
-            )
-            order = np.lexsort((cent_ids, key_cs, invalid[i]))
+            # (valid before NULL, cos DESC, cent_id ASC) — lexsort is
+            # last-key-primary
+            order = np.lexsort((cent_ids, key[i], invalid[i]))
             out.append([int(c) for c in cent_ids[order[:probes]]])
         return pd.Series(out)
 
     return top_cells
-
-
-def _block_topk_fn(k: int, emit_label: bool = False, row_chunk: int = 512):
-    """Per-block all-pairs cosine + per-node block-local top-``k`` for
-    applyInPandas, under the same sequential-dim bit-parity contract as
-    :func:`_top_cells_udf`. Used with (label, cell) blocks by the ANN
-    path and (r11 optimization) with whole label blocks by the exact
-    ``emb_knn_graph`` key, whose per-pair JVM HOF fold this replaces.
-
-    Emitting only each node's block-local top-k is EXACT: a node's
-    global candidate set is the union of its blocks, and top-k of a
-    union equals top-k over the union of per-block top-k's (the
-    standard distributive top-k reduction) — the total order
-    (cos DESC NULLS LAST, vec_b ASC) is replayed identically here, in
-    the final window, and in the oracle. NULL cosines (zero vectors)
-    are kept as candidates: with < k valid neighbors the engines rank
-    them in, so the block emits them too (None, not NaN — the object
-    column maps to a true SQL NULL through Arrow).
-
-    ``row_chunk`` bounds the live cosine matrix at chunk x m doubles
-    (r11): the dim accumulation runs per row-chunk, which leaves every
-    acc[i][j] element's left-to-right add order — and therefore the
-    bits — unchanged. ``emit_label`` adds the block's label column
-    (the recall key's truth side needs it)."""
-
-    def block_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        cols = {"vec_a": [], "vec_b": [], "cos_sim": []}
-        if emit_label:
-            cols["label"] = []
-        if m < 2:
-            # r12 (ADVICE): type EVERY column of the degenerate frame —
-            # untyped empty object columns leaned on Arrow's lenient
-            # empty cast to the declared schema
-            dtypes = {"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"}
-            if emit_label:
-                dtypes["label"] = "int32"
-            return pd.DataFrame(cols).astype(dtypes)
-        ids = pdf["vec_id"].to_numpy()
-        emat = np.vstack(
-            [np.asarray(e, dtype="float64") for e in pdf["embedding"]]
-        )
-        en2 = np.zeros(m)
-        for d in range(emat.shape[1]):
-            en2 = en2 + emat[:, d] * emat[:, d]
-        nrm = np.sqrt(en2)
-        va, vb, cs_out = [], [], []
-        for lo in range(0, m, row_chunk):
-            hi = min(lo + row_chunk, m)
-            acc = np.zeros((hi - lo, m))
-            for d in range(emat.shape[1]):
-                acc = acc + emat[lo:hi, d : d + 1] * emat[None, :, d]
-            denom = nrm[lo:hi, None] * nrm[None, :]
-            invalid = denom == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / denom
-            for ci in range(hi - lo):
-                i = lo + ci
-                key_cs = np.where(invalid[ci], 0.0, -cos[ci])
-                key_cs = np.where(
-                    np.isnan(key_cs) & ~invalid[ci], -np.inf, key_cs
-                )
-                key_cs[i] = np.inf  # self-pair: sort dead last, slice off
-                inv = invalid[ci].copy()
-                inv[i] = True
-                order = np.lexsort((ids, key_cs, inv))
-                for j in order[:k]:
-                    if j == i:
-                        continue
-                    va.append(int(ids[i]))
-                    vb.append(int(ids[j]))
-                    cs_out.append(
-                        None if invalid[ci][j] else float(cos[ci][j])
-                    )
-        out = {
-            "vec_a": pd.array(va, dtype="int64"),
-            "vec_b": pd.array(vb, dtype="int64"),
-            "cos_sim": pd.array(cs_out, dtype="object"),
-        }
-        if emit_label:
-            out["label"] = pd.array(
-                [pdf["label"].iloc[0]] * len(va), dtype="int32"
-            )
-        return pd.DataFrame(out)
-
-    return block_topk
-
-
-def _block_thresh_pairs_fn(threshold: float, row_chunk: int = 512):
-    """Per-block all-pairs cosine THRESHOLD filter for applyInPandas
-    (r11) — the vectorized twin of :func:`_block_topk_fn` for
-    pair-emitting dedup keys (dedup_embedding): emit (vec_a, vec_b,
-    cos_sim) for every in-block pair with vec_a < vec_b and
-    cos_sim > threshold, under the same sequential-dim bit-parity
-    contract. NULL cosines (zero-norm vectors) are dropped exactly as
-    the engines drop them (NULL > t is not true); NaN cosines (NaN
-    data elements) are KEPT because both Spark and DuckDB order NaN
-    above every number, so NaN > t holds there — np.isnan is the
-    explicit replay of that rule."""
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame(
-                {"vec_a": [], "vec_b": [], "cos_sim": []}
-            ).astype({"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"})
-        ids = pdf["vec_id"].to_numpy()
-        emat = np.vstack(
-            [np.asarray(e, dtype="float64") for e in pdf["embedding"]]
-        )
-        en2 = np.zeros(m)
-        for d in range(emat.shape[1]):
-            en2 = en2 + emat[:, d] * emat[:, d]
-        nrm = np.sqrt(en2)
-        va, vb, cs_out = [], [], []
-        for lo in range(0, m, row_chunk):
-            hi = min(lo + row_chunk, m)
-            acc = np.zeros((hi - lo, m))
-            for d in range(emat.shape[1]):
-                acc = acc + emat[lo:hi, d : d + 1] * emat[None, :, d]
-            denom = nrm[lo:hi, None] * nrm[None, :]
-            invalid = denom == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / denom
-            keep = ~invalid & ((cos > threshold) | np.isnan(cos))
-            # upper triangle by ID, not index: vec_a < vec_b
-            keep &= ids[lo:hi, None] < ids[None, :]
-            for ci, j in zip(*np.nonzero(keep)):
-                va.append(int(ids[lo + ci]))
-                vb.append(int(ids[j]))
-                cs_out.append(float(cos[ci, j]))
-        return pd.DataFrame(
-            {
-                "vec_a": pd.array(va, dtype="int64"),
-                "vec_b": pd.array(vb, dtype="int64"),
-                "cos_sim": pd.array(cs_out, dtype="float64"),
-            }
-        )
-
-    return block_pairs
 
 
 def _ann_model(emb: DataFrame) -> list:
@@ -382,7 +226,7 @@ def _ann_edges(
     )
     blocks = capped.join(emb.select("vec_id", "embedding"), "vec_id")
     partial = blocks.groupBy("label", "cell").applyInPandas(
-        _block_topk_fn(_ANN_K),
+        block_topk_fn(_ANN_K),
         "vec_a long, vec_b long, cos_sim double",
     )
     # a pair sharing 2+ cells appears once per shared cell with the
@@ -457,19 +301,14 @@ def emb_knn_graph_ann_recall(
     construction key is the production path unchanged."""
     emb = io.load_table(spark, sf_dir, "embeddings")
     # r11: the exact truth side rides the same vectorized per-label
-    # block worker as emb_knn_graph (bit-parity contract, see
-    # _block_topk_fn) instead of duplicating the quadratic pair JOIN +
-    # HOF fold — emit_label keeps the per-label grouping column.
-    truth = (
-        emb.filter(F.col("label").isNotNull())
-        .select("vec_id", "label", "embedding")
-        .groupBy("label")
-        .applyInPandas(
-            _block_topk_fn(_ANN_K, emit_label=True),
-            "vec_a long, vec_b long, cos_sim double, label int",
-        )
-        .select("vec_a", "vec_b", "label")
-    )
+    # block worker as emb_knn_graph (operators/cosblocks.block_topk_fn)
+    # instead of duplicating the quadratic pair JOIN + HOF fold —
+    # emit_label keeps the per-label grouping column.
+    truth = label_blocks(
+        emb,
+        block_topk_fn(_ANN_K, emit_label=True),
+        "vec_a long, vec_b long, cos_sim double, label int",
+    ).select("vec_a", "vec_b", "label")
     # one count + one centroid collect shared by every ladder rung —
     # the model is probe-independent (r11 review finding)
     cent_rows = _ann_model(emb)

@@ -102,11 +102,11 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 OPTIMIZATION (guide §4.2, same move as emb_knn_graph): the
     # hash-block self-join scored every in-block pair with the
     # aggregate() HOF cosine; the per-block top-k now runs inside the
-    # vectorized block worker (ann_round3._block_topk_fn — sequential-dim
-    # bit-parity, identical (cos DESC NULLS LAST, id ASC) order), one
-    # thin blk-keyed shuffle, labels re-attached to the k*n edge list by
-    # key. Warm sf0.1: 4.9 -> ~1.4 s, same rows.
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_topk_fn
+    # vectorized block worker (operators/cosblocks.block_topk_fn —
+    # sequential-dim bit-parity, identical (cos DESC NULLS LAST, id ASC)
+    # order), one thin blk-keyed shuffle, labels re-attached to the k*n
+    # edge list by key. Warm sf0.1: 4.9 -> ~1.4 s, same rows.
+    from hh_rumors_presto_spark.operators.cosblocks import block_topk_fn
 
     emb = io.load_table(spark, sf_dir, "embeddings")
     edges = (
@@ -115,7 +115,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("blk")
         .applyInPandas(
-            _block_topk_fn(_KNN_K), "vec_a long, vec_b long, cos_sim double"
+            block_topk_fn(_KNN_K), "vec_a long, vec_b long, cos_sim double"
         )
     )
     la = emb.select("vec_id", F.col("label").alias("true_label"))

@@ -137,9 +137,9 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose per-pair cosine ran Spark's aggregate() HOF fold — ~400k
     64-dim folds at sf0.1 (2.8-4.2 s), 321.7 s at sf1. Pairs are now
     born and reduced inside a per-label applyInPandas worker
-    (ann_round3._block_topk_fn, the same worker the ANN path certified):
+    (operators/cosblocks.block_topk_fn, the same worker the ANN path uses):
     one (label) shuffle of n thin rows, zero pair-sized exchanges, and
-    the Σblock² cosines run as chunked NumPy row ops under the module's
+    the Σblock² cosines run as chunked NumPy row ops under that module's
     sequential-dim BIT-PARITY contract — acc accumulates a[d]*b[d]
     left-to-right in float64 exactly like the old zip_with/aggregate
     fold and DuckDB's list_inner_product, so every cos_sim bit and
@@ -149,17 +149,15 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays the QUADRATIC exact key — its scale route is still
     emb_knn_graph_ann; the rewrite moves the constant, not the
     exponent (sf1: 321.7 s -> see OPTIMIZATION_r11.md)."""
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_topk_fn
+    from hh_rumors_presto_spark.operators.cosblocks import (
+        block_topk_fn,
+        label_blocks,
+    )
 
-    emb = io.load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.filter(F.col("label").isNotNull())
-        .select("vec_id", "label", "embedding")
-        .groupBy("label")
-        .applyInPandas(
-            _block_topk_fn(_KNN_K),
-            "vec_a long, vec_b long, cos_sim double",
-        )
+    return label_blocks(
+        io.load_table(spark, sf_dir, "embeddings"),
+        block_topk_fn(_KNN_K),
+        "vec_a long, vec_b long, cos_sim double",
     )
 
 

@@ -137,7 +137,7 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return blocked_pairs(
-        doc_bigram_items(spark, sf_dir),
+        doc_bigram_items(io.load_table(spark, sf_dir, "documents"), ["shingle"]),
         overlap_pairs_fn(
             rational=(_PP_NUM, _PP_DEN), emit_counts=True, emit_jaccard=True
         ),

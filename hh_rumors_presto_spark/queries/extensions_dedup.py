@@ -219,24 +219,10 @@ def _ngram_jaccard_blocked(docs: DataFrame) -> DataFrame:
     from hh_rumors_presto_spark.operators.pairblocks import (
         blocked_pairs,
         overlap_pairs_fn,
-        vocab_ids,
     )
 
-    inv = (
-        # bind split() into a named column first — the bigram_shingles
-        # perf contract (inline split re-evaluates inside the lambdas)
-        docs.select("doc_id", "lang", F.split("text", " ").alias("toks"))
-        .select("doc_id", "lang", bigram_shingles(F.col("toks")).alias("shingles"))
-        .select("doc_id", "lang", F.explode("shingles").alias("shingle"))
-        .localCheckpoint(eager=False)
-    )
-    items = (
-        inv.join(F.broadcast(vocab_ids(inv, ["lang", "shingle"])), ["lang", "shingle"])
-        .groupBy(F.col("doc_id").alias("id"))
-        .agg(F.sort_array(F.collect_list(F.col("vid").cast("int"))).alias("vids"))
-    )
     return blocked_pairs(
-        items,
+        doc_bigram_items(docs, ["lang", "shingle"]),
         overlap_pairs_fn(float_threshold=0.05, emit_jaccard=True),
         "id_a long, id_b long, jaccard double",
     ).select(
@@ -905,31 +891,32 @@ def _bigram_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return blocked_pairs(
-        doc_bigram_items(spark, sf_dir),
+        doc_bigram_items(io.load_table(spark, sf_dir, "documents"), ["shingle"]),
         overlap_pairs_fn(rational=(1, 2)),
         "id_a long, id_b long",
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 
-def doc_bigram_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per document: (id, sorted distinct bigram-shingle vocab
-    ids) — the item form the blocked pair workers consume.  Shared by
-    _bigram_jaccard_truth (Jaccard >= 1/2) and dedup_ppjoin (>= 7/10).
-    Shingle ids come from a vocabulary-bounded rank (collision-free,
-    unlike hashing)."""
+def doc_bigram_items(docs: DataFrame, vocab_keys: list[str]) -> DataFrame:
+    """One row per document of ``docs``: (id, sorted bigram-shingle vocab
+    ids) — the item form the blocked pair workers consume.  One vocab id
+    stands for one value of ``vocab_keys`` (["shingle"], or ["lang",
+    "shingle"] so a shared id also means a shared lang; NULL keys drop
+    out at the vocab join).  Ids come from a vocabulary-bounded rank
+    (collision-free, unlike hashing)."""
     from hh_rumors_presto_spark.operators.pairblocks import vocab_ids
 
-    docs = io.load_table(spark, sf_dir, "documents")
+    keep = ["doc_id", *(k for k in vocab_keys if k != "shingle")]
     inv = (
         # bind split() into a named column first — the bigram_shingles
         # perf contract (inline split re-evaluates inside the lambdas)
-        docs.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", bigram_shingles(F.col("toks")).alias("shingles"))
-        .select("doc_id", F.explode("shingles").alias("shingle"))
+        docs.select(*keep, F.split("text", " ").alias("toks"))
+        .select(*keep, bigram_shingles(F.col("toks")).alias("shingles"))
+        .select(*keep, F.explode("shingles").alias("shingle"))
         .localCheckpoint(eager=False)
     )
     return (
-        inv.join(F.broadcast(vocab_ids(inv, ["shingle"])), "shingle")
+        inv.join(F.broadcast(vocab_ids(inv, vocab_keys)), vocab_keys)
         .groupBy(F.col("doc_id").alias("id"))
         .agg(F.sort_array(F.collect_list(F.col("vid").cast("int"))).alias("vids"))
     )

@@ -20,6 +20,12 @@ from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
 from hh_rumors_presto_spark.functions import cosine_similarity, dot, l2_norm
+from hh_rumors_presto_spark.operators.cosblocks import (
+    block_cos_hist_fn,
+    block_thresh_pairs_fn,
+    label_blocks,
+    seq_dot,
+)
 from hh_rumors_presto_spark.registry import query
 
 N_QUERIES = 10
@@ -111,23 +117,16 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 OPTIMIZATION (guide §4.2, same move as emb_knn_graph): the
     label-keyed self-JOIN whose per-pair cosine ran the aggregate() HOF
     fold is replaced by a per-label applyInPandas worker
-    (ann_round3._block_thresh_pairs_fn) — one thin label shuffle, the
-    Σblock² cosines run as chunked NumPy row ops under the sequential-dim
-    bit-parity contract, and the >0.3 filter replays the engines'
-    NULL-drop / NaN-keep comparison rules exactly. Null labels never
-    formed pairs under the old join-on-equality; the explicit filter
-    reproduces that."""
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_thresh_pairs_fn
-
-    emb = io.load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.filter(F.col("label").isNotNull())
-        .select("vec_id", "label", "embedding")
-        .groupBy("label")
-        .applyInPandas(
-            _block_thresh_pairs_fn(0.3),
-            "vec_a long, vec_b long, cos_sim double",
-        )
+    (operators/cosblocks.block_thresh_pairs_fn) — one thin label
+    shuffle, the Σblock² cosines run as chunked NumPy row ops under the
+    sequential-dim bit-parity contract, and the >0.3 filter replays the
+    engines' NULL-drop / NaN-keep comparison rules exactly. Null labels
+    never formed pairs under the old join-on-equality; label_blocks'
+    explicit filter reproduces that."""
+    return label_blocks(
+        io.load_table(spark, sf_dir, "embeddings"),
+        block_thresh_pairs_fn(0.3),
+        "vec_a long, vec_b long, cos_sim double",
     )
 
 
@@ -495,12 +494,11 @@ def _mt_sig_sql(planes: list[list[float]], t: int) -> str:
 def _plane_sigs_udf(planes: list[list[float]], n_tables: int, n_bits: int):
     """Vectorized (Arrow) hyperplane-signature generator (r11): per input
     vector, the ``n_tables`` bucket signatures (``n_bits`` chars each).
-    BIT-PARITY: the dim loop accumulates acc += emb[d] * plane[d]
-    left-to-right in float64 — identical to the old per-plane
-    aggregate() HOF fold and to DuckDB's list_inner_product, so the
-    >= 0 sign bits (and therefore every bucket) match exactly. Only the
-    first 64 dims participate, mirroring the engines' embedding[1:64]
-    slice."""
+    BIT-PARITY: the dots come from operators/cosblocks.seq_dot (the
+    sequential-dim fold of the old per-plane aggregate() HOF and of
+    DuckDB's list_inner_product), so the >= 0 sign bits (and therefore
+    every bucket) match exactly. Only the first 64 dims participate,
+    mirroring the engines' embedding[1:64] slice."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -513,10 +511,7 @@ def _plane_sigs_udf(planes: list[list[float]], n_tables: int, n_bits: int):
         emat = np.vstack(
             [np.asarray(e, dtype="float64")[:64] for e in embs]
         )
-        acc = np.zeros((emat.shape[0], pmat.shape[0]))
-        for d in range(emat.shape[1]):
-            acc = acc + emat[:, d : d + 1] * pmat[None, :, d]
-        bits = np.where(acc >= 0, "1", "0")
+        bits = np.where(seq_dot(emat, pmat) >= 0, "1", "0")
         out = []
         for i in range(emat.shape[0]):
             out.append(
@@ -745,73 +740,16 @@ def emb_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     end."""
     # r11 OPTIMIZATION (guide §4.2, same move as emb_knn_graph /
     # dedup_embedding): the label-keyed self-join + per-pair HOF cosine
-    # is replaced by a per-label worker that computes the chunked
-    # all-pairs cosine matrix under the sequential-dim bit-parity
-    # contract and emits the FINISHED per-bin counts — one thin label
-    # shuffle, a few histogram rows out per block, no pair-sized
-    # exchange. bin = floor(cos * 10) replays the engines' float64
-    # multiply+floor bit-for-bit; NULL cosines (zero-norm vectors) keep
-    # their NULL-bin group exactly as the old groupBy did. Warm sf0.1:
+    # is replaced by a per-label worker (operators/cosblocks
+    # .block_cos_hist_fn) that computes the chunked all-pairs cosine
+    # matrix under the sequential-dim bit-parity contract and emits the
+    # FINISHED per-bin counts — one thin label shuffle, a few histogram
+    # rows out per block, no pair-sized exchange. Warm sf0.1:
     # 3.3 -> ~0.7 s, same rows.
-    import numpy as np
-
-    def bin_hist(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"label": [], "bin": [], "n_pairs": []}).astype(
-                {"label": "int32", "n_pairs": "int64"}
-            )
-        label = pdf["label"].iloc[0]
-        ids = pdf["vec_id"].to_numpy()
-        emat = np.vstack(
-            [np.asarray(e, dtype="float64") for e in pdf["embedding"]]
-        )
-        en2 = np.zeros(m)
-        for d in range(emat.shape[1]):
-            en2 = en2 + emat[:, d] * emat[:, d]
-        nrm = np.sqrt(en2)
-        counts: dict = {}
-        chunk = 512
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            acc = np.zeros((hi - lo, m))
-            for d in range(emat.shape[1]):
-                acc = acc + emat[lo:hi, d : d + 1] * emat[None, :, d]
-            denom = nrm[lo:hi, None] * nrm[None, :]
-            invalid = denom == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / denom
-            upper = ids[lo:hi, None] < ids[None, :]
-            n_null = int(np.count_nonzero(upper & invalid))
-            if n_null:
-                counts[None] = counts.get(None, 0) + n_null
-            valid = upper & ~invalid
-            bins = np.floor(cos[valid] * 10)
-            # NaN cosine -> NULL bin, matching Spark's non-ANSI
-            # floor(NaN) cast int (fixtures carry none; defensive)
-            nan_n = int(np.count_nonzero(np.isnan(bins)))
-            if nan_n:
-                counts[None] = counts.get(None, 0) + nan_n
-            uniq, cnt = np.unique(
-                bins[~np.isnan(bins)].astype("int64"), return_counts=True
-            )
-            for bv, n in zip(uniq, cnt):
-                counts[int(bv)] = counts.get(int(bv), 0) + int(n)
-        rows = sorted(counts.items(), key=lambda kv: (kv[0] is None, kv[0]))
-        return pd.DataFrame(
-            {
-                "label": pd.array([label] * len(rows), dtype="int32"),
-                "bin": pd.array([k for k, _ in rows], dtype="object"),
-                "n_pairs": pd.array([v for _, v in rows], dtype="int64"),
-            }
-        )
-
-    emb = io.load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.filter(F.col("label").isNotNull())
-        .select("vec_id", "label", "embedding")
-        .groupBy("label")
-        .applyInPandas(bin_hist, "label int, bin int, n_pairs long")
+    return label_blocks(
+        io.load_table(spark, sf_dir, "embeddings"),
+        block_cos_hist_fn(),
+        "label int, bin int, n_pairs long",
     )
 
 

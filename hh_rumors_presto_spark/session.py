@@ -14,7 +14,12 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """$SPARK_GRAFT_CPUS (default 32), the one place it is parsed: a
+    ValueError naming the variable unless it is a positive integer."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not raw.isdecimal() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
 
 
 # Keys whose result values depend on the SESSION TIMEZONE — the inherent

@@ -24,10 +24,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from hh_rumors_presto_spark.queries.ann_round3 import (
-    _ANN_K,
-    _block_topk_fn,
+from hh_rumors_presto_spark.operators.cosblocks import (
+    block_topk_fn as _block_topk_fn,
 )
+from hh_rumors_presto_spark.queries.ann_round3 import _ANN_K
 
 
 def _brute_topk(pdf: pd.DataFrame, k: int) -> set[tuple]:
@@ -219,7 +219,9 @@ def test_worker_chunking_is_bit_invariant():
 
 
 def test_worker_emit_label_carries_block_label():
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_topk_fn
+    from hh_rumors_presto_spark.operators.cosblocks import (
+        block_topk_fn as _block_topk_fn,
+    )
 
     pdf = pd.DataFrame(
         {
@@ -242,8 +244,8 @@ def test_thresh_pairs_matches_brute_force():
     """dedup_embedding's worker: every in-block pair with vec_a < vec_b
     and cos > t, NULL dropped (NULL > t is not true), NaN kept (both
     engines order NaN above every number)."""
-    from hh_rumors_presto_spark.queries.ann_round3 import (
-        _block_thresh_pairs_fn,
+    from hh_rumors_presto_spark.operators.cosblocks import (
+        block_thresh_pairs_fn as _block_thresh_pairs_fn,
     )
 
     rng = random.Random(7)

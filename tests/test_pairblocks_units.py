@@ -28,6 +28,7 @@ import random
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from hh_rumors_presto_spark.operators.pairblocks import (
     overlap_pairs_fn,
@@ -50,7 +51,7 @@ def _group(n: int, two_sided: bool, seed: int, vocab: int = 40) -> pd.DataFrame:
 def _brute_pairs(pdf, rat=None, thr=None):
     sets = {r["id"]: set(r["vids"]) for _, r in pdf.iterrows()}
     sides = {r["id"]: r["__side"] for _, r in pdf.iterrows()}
-    diag = all(s == 0 for s in sides.values())
+    diag = bool((pdf["__bp_i"] == pdf["__bp_j"]).all())
     out = set()
     for a, b in itertools.combinations(sorted(sets), 2):
         if not diag and sides[a] == sides[b]:
@@ -142,11 +143,39 @@ def test_overlap_pairs_empty_and_degenerate_typed():
                 assert str(out.dtypes["jaccard"]) == "float64"
 
 
+def test_one_sided_off_diagonal_group_emits_nothing():
+    # group (0, 1) whose block 1 is empty holds only side-A rows of block
+    # 0; block 0's in-block pairs belong to group (0, 0) alone, so this
+    # group must emit no pair (deriving diag from the sides present
+    # re-emitted them: a duplicate pair per in-block match)
+    rows = [(0, 1, 0, i, [1, 2, 3]) for i in (1, 2, 3)]
+    pdf = pd.DataFrame(rows, columns=COLS)
+    for fn in (
+        overlap_pairs_fn(rational=(1, 2)),
+        overlap_pairs_fn(float_threshold=0.5, emit_jaccard=True),
+    ):
+        assert len(fn(pdf)) == 0
+    wpdf = pd.DataFrame(
+        [r + ([10, 20, 30],) for r in rows], columns=COLS + ["ws"]
+    )
+    assert len(weighted_topk_fn(5)(wpdf)) == 0
+    # the same rows as the diagonal group (0, 0) do pair up
+    diag = pdf.assign(__bp_j=0)
+    assert len(overlap_pairs_fn(rational=(1, 2))(diag)) == 3
+    assert len(weighted_topk_fn(5)(wpdf.assign(__bp_j=0))) == 3
+
+
+def test_overlap_pairs_needs_exactly_one_threshold():
+    for kwargs in ({}, {"rational": (1, 2), "float_threshold": 0.5}):
+        with pytest.raises(ValueError, match="exactly one"):
+            overlap_pairs_fn(**kwargs)
+
+
 def _brute_weighted_topk(pdf, k):
     vids = {r["id"]: list(r["vids"]) for _, r in pdf.iterrows()}
     ws = {r["id"]: dict(zip(r["vids"], r["ws"])) for _, r in pdf.iterrows()}
     sides = {r["id"]: r["__side"] for _, r in pdf.iterrows()}
-    diag = all(s == 0 for s in sides.values())
+    diag = bool((pdf["__bp_i"] == pdf["__bp_j"]).all())
     cand = []
     for a, b in itertools.combinations(sorted(vids), 2):
         if not diag and sides[a] == sides[b]:

@@ -291,8 +291,8 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
          "single thin shuffle keyed by block-pair, no pair-sized exchange"),
     ],
     # r11 optimization: the exact key's pair stream moved inside a
-    # per-label vectorized block worker (ann_round3._block_topk_fn) —
-    # one thin label-keyed shuffle, no pair-sized exchange, no window.
+    # per-label vectorized block worker (operators/cosblocks.block_topk_fn)
+    # — one thin label-keyed shuffle, no pair-sized exchange, no window.
     "emb_knn_graph": [
         (r"FlatMapGroupsInPandas", "all-pairs cosine confined to the label-block worker"),
         (r"hashpartitioning\(label", "single thin shuffle keyed by label"),
