@@ -17,9 +17,10 @@ Scale posture (100 TB): each PageRank/BFS round is one equi-join + one
 hash aggregate on the edge list — the standard Pregel-as-joins shape; no
 collect of edges or ranks, driver holds only the scalar node count.
 ``localCheckpoint`` per round truncates the iterative lineage exactly as
-in dedup_clusters (extensions_dedup.py). Edge build is one shuffle join;
-at cluster scale the edge list would be bucketed by src once and reused
-across all rounds with zero further edge shuffles.
+in the connected-components operator (operators/components.py). Edge
+build is one shuffle join; at cluster scale the edge list would be
+bucketed by src once and reused across all rounds with zero further edge
+shuffles.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.operators.components import connected_components
 from hh_rumors_presto_spark.queries.extensions_dedup import (
     _jaccard_pairs_sql,
     dedup_ngram_jaccard,
@@ -53,20 +55,26 @@ _GRAPH_SQL = """
 """
 
 
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _trade_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The raw customer↔supplier node stream of ``lineitem ⋈ orders``:
+    one (c_node, s_node) row per line item, duplicates kept."""
     li = io.load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = io.load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c_node"),
-            (F.col("l_suppkey") * 2 + 1).alias("s_node"),
-        )
-        .distinct()
+    return li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        (F.col("o_custkey") * 2).alias("c_node"),
+        (F.col("l_suppkey") * 2 + 1).alias("s_node"),
     )
+
+
+def _mirror(pairs: DataFrame) -> DataFrame:
+    """(c_node, s_node) pairs -> both directed edges as (src, dst)."""
     return pairs.select(
         F.col("c_node").alias("src"), F.col("s_node").alias("dst")
     ).unionAll(pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst")))
+
+
+def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _mirror(_trade_stream(spark, sf_dir).distinct())
 
 
 def _edges_by_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,17 +93,10 @@ def _edges_by_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay exchange-free."""
     from hh_rumors_presto_spark.session import default_parallelism
 
-    li = io.load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = io.load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        (F.col("o_custkey") * 2).alias("c_node"),
-        (F.col("l_suppkey") * 2 + 1).alias("s_node"),
-    )
-    bidir = raw.select(
-        F.col("c_node").alias("src"), F.col("s_node").alias("dst")
-    ).unionAll(raw.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst")))
-    return bidir.repartition(default_parallelism(), "dst").dropDuplicates(
-        ["src", "dst"]
+    return (
+        _mirror(_trade_stream(spark, sf_dir))
+        .repartition(default_parallelism(), "dst")
+        .dropDuplicates(["src", "dst"])
     )
 
 
@@ -745,10 +746,10 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weakly connected components over the REPEAT-TRADE graph: an edge
     per (customer, supplier) pair that traded on >= 2 line items AND
-    shares a nation. Min-label propagation to the fixpoint (the same
-    driver-coordinated loop as dedup_clusters — one equi-join + one hash
-    agg per round, O(diameter) rounds, localCheckpoint truncating the
-    iterative lineage); the answer is the per-component census
+    shares a nation. Labels come from the shared connected-components
+    operator (operators/components.py — the one dedup_clusters uses:
+    bounded min-label propagation, then star contraction for chain-shaped
+    components); the answer is the per-component census
     (n_nodes / n_customers / n_suppliers), all-integer and therefore
     bit-deterministic under any partitioning.
 
@@ -758,9 +759,7 @@ def graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the largest within-nation trading cluster (Σ block², never n²) — the
     same bound argument the blocked dedup family relies on. At cluster
     scale the edge list is built once (one shuffle), checkpointed, and
-    every round touches only |V| label rows; the two-hop double-step
-    halves the rounds' checkpoint overhead without changing the fixpoint
-    (min-label propagation is monotone, so no oscillation)."""
+    every round touches only |V| label rows."""
     li = io.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
@@ -785,100 +784,11 @@ def graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         .filter(F.col("count") >= 2)
         .select("c_node", "s_node")
-    )
-    edges = (
-        pairs.select(F.col("c_node").alias("a"), F.col("s_node").alias("b"))
-        .unionAll(
-            pairs.select(
-                F.col("s_node").alias("a"), F.col("c_node").alias("b")
-            )
-        )
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint()
-    )
-
-    # r11: A/B-tested the dedup_clusters self-loop/quad-step rewrite here
-    # — this graph's trading clusters converge in 2-4 hops, so neither
-    # variant beat the original warm (2.9-3.7 s band in every shape);
-    # the original double-step with merge-back stays.
-    def propagate(lbl: DataFrame) -> DataFrame:
-        neigh = (
-            edges.join(lbl, edges.b == lbl.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("neigh_min"))
-        )
-        return (
-            lbl.withColumnRenamed("component", "prev")
-            .join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("prev"),
-                    F.coalesce(F.col("neigh_min"), F.col("prev")),
-                ).alias("component"),
-            )
-        )
-
-    # PHASE 1: propagate until a full double-step changes nothing — the
-    # 10-hop horizon resolves the dense trading clusters this graph
-    # actually produces. PHASE 2 (round 7, replacing the old 64-round cap
-    # + RuntimeError): a graph still unconverged past the horizon is
-    # chain-shaped — hand the ORIGINAL edge list to the alternating
-    # large-star/small-star contraction (dedup_clusters' deep-graph
-    # phase), which converges in O(log^2 n) alternations instead of
-    # O(diameter). star_contract loops to its probed fixpoint and RAISES
-    # if its (generous, 1024-round) safety cap is ever exhausted — it
-    # never returns a partial edge list, so this path cannot silently
-    # mislabel components (round-8 fix; the old cap of 12 could).
-    converged = False
-    for _ in range(5):
-        stepped = propagate(propagate(labels.select("node", "component")))
-        merged = (
-            labels.select("node", F.col("component").alias("old_label"))
-            .join(stepped, "node")
-            .select("node", "old_label", "component")
-            .localCheckpoint()
-        )
-        labels = merged.select("node", "component")
-        if (
-            merged.filter(F.col("component") != F.col("old_label"))
-            .limit(1)
-            .count()
-            == 0
-        ):
-            converged = True
-            break
-    if not converged:
-        from hh_rumors_presto_spark.queries.extensions_dedup import (
-            star_contract,
-        )
-
-        stars = star_contract(
-            pairs.select(
-                F.greatest("c_node", "s_node").alias("big"),
-                F.least("c_node", "s_node").alias("small"),
-            )
-        )
-        labels = (
-            edges.select(F.col("a").alias("node"))
-            .distinct()
-            .join(
-                stars.select(
-                    F.col("big").alias("node"),
-                    F.col("small").alias("center"),
-                ),
-                "node",
-                "left",
-            )
-            .select(
-                "node", F.coalesce("center", "node").alias("component")
-            )
-        )
+    nodes = pairs.select("c_node").unionAll(pairs.select("s_node")).distinct()
+    # r11 found no step shape faster on this graph: it shares the quad step
+    labels = connected_components(pairs, nodes)
     return labels.groupBy("component").agg(
         F.count("*").alias("n_nodes"),
         F.sum((F.col("node") % 2 == 0).cast("bigint")).alias("n_customers"),

@@ -1,5 +1,5 @@
 """Direct drive of the large-star/small-star contraction phase of
-dedup_clusters (extensions_dedup.star_contract) on adversarial graph
+dedup_clusters (operators.components.star_contract) on adversarial graph
 shapes the parquet fixtures never produce — in particular CHAINS far past
 the phase-1 propagation horizon, which is exactly the 100 TB failure mode
 the hybrid exists for (templated/boilerplate near-dup runs whose dup graph
@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from hh_rumors_presto_spark.queries.extensions_dedup import star_contract
+from hh_rumors_presto_spark.operators.components import star_contract
 
 
 def _components(edge_list):

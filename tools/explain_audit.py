@@ -84,7 +84,8 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     ],
     # graph_wcc's iterative star/propagation rounds run BEFORE the final
     # checkpoint, so the returned plan is just the component rollup; the
-    # per-round plans are covered by the dedup_clusters/star gates.
+    # rounds are covered by tests/test_star_contraction*.py,
+    # tests/test_components_units.py and the DuckDB oracle.
     "graph_wcc": [
         (r"HashAggregate", "component rollup over checkpointed labels"),
     ],
